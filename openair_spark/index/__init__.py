@@ -8,5 +8,10 @@
               (latLngToCell/parent/gridDisk anchors, pentagon list).
   quadkey.py  lat/lon quadtree cells in pure floor arithmetic — the
               SQL-expressible index used by the DuckDB correctness oracle.
-  cover.py    compact polygon covers over any of the above.
+  pip.py      ray-cast point-in-polygon: points_in_ring and the CSR
+              RingSet for bulk (point, ring) tests.
+  cover.py    compact quadkey polygon covers: the compact_cover oracle,
+              the level-batched cover_flat engine (cover_batch is its
+              per-ring view) and RingBatch, the ring geometry the
+              quadkey, H3 and S2 cover classifiers share.
 """

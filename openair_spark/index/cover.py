@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import quadkey
-from .pip import points_in_ring
+from .pip import RingSet, points_in_ring
 
 
 def _ring_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:
@@ -142,24 +142,127 @@ def compact_cover(ring, min_res: int = 5, max_res: int = 9,
     return out
 
 
-# pair budget per classification chunk: the CSR expansion materializes
-# (cells x own-ring segments) temporaries; chunking bounds peak memory
-# and keeps the working set cache-sized (same rationale as
-# ops/_cover_common._PAIR_BUDGET)
+
+
+# pair-expansion budget: the (cell, own-ring segment) pair expansion
+# materializes index/coordinate temporaries BEFORE bbox pruning;
+# chunking the cell axis by a pair budget (instead of a fixed cell
+# count) keeps peak temp memory bounded for arc-heavy rings with
+# thousands of segments and the working set cache-sized
 _PAIR_BUDGET = 4_000_000
+_MIN_CHUNK = 1024
+_MAX_CHUNK = 65536
+
+
+# longitude strips per ring for the candidate-segment index: each ring's
+# bbox x-range is split into _N_STRIPS equal strips and every segment is
+# registered in the strips its x-interval touches; a cell then gathers
+# only the segments of its own x-range's strips — a provable SUPERSET of
+# every bbox-overlap pair test downstream (floor-mapping is monotone, so
+# overlapping x-intervals always share a strip), so verdicts are exactly
+# unchanged while the expanded pair count drops ~7-10x on the bench
+# corpus (measured; the dense expansion was the classifiers' base cost).
+_N_STRIPS = 16
+
+
+class RingBatch:
+    """CSR geometry of a batch of closed rings, shared by the quadkey,
+    H3 and S2 cover classifiers: concatenated edges (RingSet layout),
+    per-segment bboxes, per-ring bbox and center longitude, and the
+    per-ring x-strip segment index."""
+
+    def __init__(self, rings: list):
+        self.rings = rings
+        self.rs = RingSet({i: r for i, r in enumerate(rings)})
+        rs = self.rs
+        self.sxmin = np.minimum(rs.x1, rs.x2)
+        self.sxmax = np.maximum(rs.x1, rs.x2)
+        self.symin = np.minimum(rs.y1, rs.y2)
+        self.symax = np.maximum(rs.y1, rs.y2)
+        self.bbox = np.stack([  # (R, 4): w, s, e, n
+            np.array([r[:, 0].min() for r in rings]),
+            np.array([r[:, 1].min() for r in rings]),
+            np.array([r[:, 0].max() for r in rings]),
+            np.array([r[:, 1].max() for r in rings]),
+        ], axis=1) if rings else np.empty((0, 4))
+        self.cx = (self.bbox[:, 0] + self.bbox[:, 2]) / 2.0
+        # ---- x-strip segment index
+        nr = len(rings)
+        K = _N_STRIPS
+        self.n_strips = K
+        if nr and len(rs.x1):
+            w = self.bbox[:, 0]
+            self.strip_x0 = w
+            self.strip_w = np.maximum(
+                (self.bbox[:, 2] - w) / K, 1e-300)
+            seg_ring = np.repeat(np.arange(nr), rs.lens)
+            k0 = np.clip(((self.sxmin - w[seg_ring])
+                          / self.strip_w[seg_ring]).astype(np.int64), 0, K - 1)
+            k1 = np.clip(((self.sxmax - w[seg_ring])
+                          / self.strip_w[seg_ring]).astype(np.int64), 0, K - 1)
+            nspan = k1 - k0 + 1
+            seg_rep = np.repeat(np.arange(len(seg_ring)), nspan)
+            cum = np.cumsum(nspan)
+            within = np.arange(int(cum[-1])) - np.repeat(cum - nspan, nspan)
+            slot = seg_ring[seg_rep] * K + k0[seg_rep] + within
+            order = np.argsort(slot, kind="stable")
+            self.strip_seg = seg_rep[order]
+            counts = np.bincount(slot, minlength=nr * K)
+            self.strip_off = np.concatenate(
+                [[0], np.cumsum(counts)]).astype(np.int64)
+        else:
+            self.strip_x0 = np.zeros(nr)
+            self.strip_w = np.ones(nr)
+            self.strip_seg = np.empty(0, dtype=np.int64)
+            self.strip_off = np.zeros(nr * K + 1, dtype=np.int64)
+
+    def candidate_pairs(self, owner_chunk: np.ndarray, cxmin: np.ndarray,
+                        cxmax: np.ndarray):
+        """(crow, seg) pairs restricted to the cells' x-strips — a
+        superset (possibly with duplicates) of every (cell, own-ring
+        segment) pair whose bboxes overlap in x; all downstream
+        bbox/crossing tests still run per pair, so results are exactly
+        those of the dense expansion."""
+        K = self.n_strips
+        o = owner_chunk
+        x0 = self.strip_x0[o]
+        sw = self.strip_w[o]
+        k0 = np.clip(((cxmin - x0) / sw).astype(np.int64), 0, K - 1)
+        k1 = np.clip(((cxmax - x0) / sw).astype(np.int64), 0, K - 1)
+        # cells with no x-overlap with their ring's bbox have no
+        # overlapping segments and no contained vertices at all
+        none = (cxmax < self.bbox[o, 0]) | (cxmin > self.bbox[o, 2])
+        nst = np.where(none, 0, k1 - k0 + 1)
+        cell_rep = np.repeat(np.arange(len(o)), nst)
+        cums = np.cumsum(nst)
+        total = int(cums[-1]) if len(o) else 0
+        within = np.arange(total) - np.repeat(cums - nst, nst)
+        slot = o[cell_rep] * K + k0[cell_rep] + within
+        cnt = self.strip_off[slot + 1] - self.strip_off[slot]
+        crow = np.repeat(cell_rep, cnt)
+        cum2 = np.cumsum(cnt)
+        total2 = int(cum2[-1]) if len(slot) else 0
+        within2 = np.arange(total2) - np.repeat(cum2 - cnt, cnt)
+        seg = self.strip_seg[np.repeat(self.strip_off[slot], cnt) + within2]
+        return crow, seg
+
+    def chunk_size(self) -> int:
+        """Cell-axis chunk honoring the pair budget for this batch's
+        longest ring."""
+        max_len = int(self.rs.lens.max()) if len(self.rs.lens) else 1
+        return int(np.clip(_PAIR_BUDGET // max(1, max_len),
+                           _MIN_CHUNK, _MAX_CHUNK))
 
 
 def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
-                          rs) -> np.ndarray:
+                          rb: RingBatch) -> np.ndarray:
     """Batched classify_cells: verdicts of many cells, each against ITS
-    OWN ring (`owner` indexes the RingSet `rs`). Exactly the
+    OWN ring (`owner` indexes the RingBatch `rb`). Exactly the
     classify_cells predicate — bbox-inclusive vertex-in-cell, STRICT
     4-edge crossing on bbox-overlapping pairs, full-ring corner ray
     casts (RingSet.contains: the same half-open arithmetic as
     points_in_ring, exact integer parity) — evaluated in a few large
-    vectorized passes instead of one small call per (ring, level) (the
-    per-ring path was numpy-call-overhead-bound: ~47k small calls over
-    the bench corpus)."""
+    vectorized passes instead of one small call per (ring, level)."""
     m = len(cells)
     verdict = np.empty(m, dtype=np.int8)
     if m == 0:
@@ -172,14 +275,8 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
     east = -180.0 + (x + 1) * 360.0 / n
     south = -90.0 + y * 180.0 / n
     north = -90.0 + (y + 1) * 180.0 / n
-
-    sxmin = np.minimum(rs.x1, rs.x2)
-    sxmax = np.maximum(rs.x1, rs.x2)
-    symin = np.minimum(rs.y1, rs.y2)
-    symax = np.maximum(rs.y1, rs.y2)
-
-    max_len = int(rs.lens.max()) if len(rs.lens) else 1
-    chunk = max(1024, _PAIR_BUDGET // max(1, max_len))
+    rs = rb.rs
+    chunk = rb.chunk_size()
 
     for s0 in range(0, m, chunk):
         sel = slice(s0, min(m, s0 + chunk))
@@ -187,17 +284,13 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
         o = owner[sel]
         w_, e_ = west[sel], east[sel]
         s_, n_ = south[sel], north[sel]
-        # CSR (cell, own-ring segment) pairs. Segment starts double as
-        # the ring vertex set: classify_cells tests every ring point
-        # incl. the duplicated closing vertex, whose coordinates equal
-        # vertex 0 — set-equivalent for the `any` reduction.
-        cl = rs.lens[o]
-        crow = np.repeat(np.arange(mm), cl)
-        cum = np.cumsum(cl)
-        total = int(cum[-1]) if mm else 0
-        within = np.arange(total) - np.repeat(cum - cl, cl)
-        seg = np.repeat(rs.starts[o], cl) + within
-
+        # x-strip (cell, own-ring segment) pairs: every pair the vertex
+        # and crossing tests below can accept is among them. Segment
+        # starts double as the ring vertex set: classify_cells tests
+        # every ring point incl. the duplicated closing vertex, whose
+        # coordinates equal vertex 0 — set-equivalent for the `any`
+        # reduction (as are duplicate pairs).
+        crow, seg = rb.candidate_pairs(o, w_, e_)
         pvx, pvy = rs.x1[seg], rs.y1[seg]
         cw, ce = w_[crow], e_[crow]
         cs, cn = s_[crow], n_[crow]
@@ -205,8 +298,8 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
         vert_in = np.zeros(mm, dtype=bool)
         vert_in[crow[vert_hit]] = True
 
-        overlap = ((sxmin[seg] <= ce) & (sxmax[seg] >= cw)
-                   & (symin[seg] <= cn) & (symax[seg] >= cs))
+        overlap = ((rb.sxmin[seg] <= ce) & (rb.sxmax[seg] >= cw)
+                   & (rb.symin[seg] <= cn) & (rb.symax[seg] >= cs))
         ci, sj = crow[overlap], seg[overlap]
         crossing = np.zeros(mm, dtype=bool)
         if len(ci):
@@ -239,62 +332,47 @@ def _classify_cells_multi(cells: np.ndarray, owner: np.ndarray,
     return verdict
 
 
-def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
-                max_cells: int = 4096) -> list:
-    """Compact quadkey covers of MANY rings with level-batched
-    classification: one _classify_cells_multi call per refinement level
-    for the whole batch instead of one classify_cells call per
-    (ring, level). Per-ring results are the same (cell, is_full) SETS
-    compact_cover produces, including the per-ring max_cells degrade
-    semantics (asserted ring-by-ring over the full bench corpus and by
-    tests/test_properties.py)."""
-    nr = len(rings)
-    if nr == 0:
-        return []
-    rings = [np.asarray(r, dtype=np.float64) for r in rings]
-    # CSR edge arrays shared by the crossing tests and the corner ray
-    # casts (RingSet: x1/y1 are the segment start points = ring
-    # vertices sans the duplicated closing vertex)
-    from .pip import RingSet
-    rs = RingSet({i: r for i, r in enumerate(rings)})
-
+def cover_flat(rb: RingBatch, min_res: int = 5, max_res: int = 9,
+               max_cells: int = 4096):
+    """Compact quadkey covers of every ring of `rb` with level-batched
+    classification (one _classify_cells_multi call per refinement level
+    for the whole batch). Returns flat (owner, cell, is_full) arrays
+    sorted by owner ring; each ring's rows are the (cell, is_full) SET
+    compact_cover produces, including its per-ring max_cells degrade
+    (asserted by tests/test_properties.py)."""
+    nr = len(rb.rings)
     out_cells: list = []
     out_owner: list = []
     out_full: list = []
     n_out = np.zeros(nr, dtype=np.int64)
     done = np.zeros(nr, dtype=bool)
 
-    # seeds: bbox rectangle fill at min_res per ring (same cells as
-    # compact_cover's seed set; the corner cell_ids it adds first are
-    # subsumed by the rectangle fill)
-    seed_c: list = []
-    seed_o: list = []
-    for i, r in enumerate(rings):
-        w, s = float(r[:, 0].min()), float(r[:, 1].min())
-        e, n = float(r[:, 0].max()), float(r[:, 1].max())
-        _, x0, y0 = quadkey.decode(int(quadkey.cell_id(s, w, min_res)))
-        _, x1, y1 = quadkey.decode(int(quadkey.cell_id(n, e, min_res)))
-        xs = np.arange(int(x0), int(x1) + 1, dtype=np.int64)
-        ys = np.arange(int(y0), int(y1) + 1, dtype=np.int64)
-        cells = ((np.int64(min_res) << quadkey._RES_SHIFT)
-                 + (ys[:, None] << quadkey._Y_SHIFT) + xs[None, :]).ravel()
-        seed_c.append(np.sort(cells))
-        seed_o.append(np.full(len(cells), i, dtype=np.int64))
-    frontier = np.concatenate(seed_c)
-    fowner = np.concatenate(seed_o)
+    # seeds: bbox rectangle fill at min_res per ring, y-major like
+    # compact_cover's sorted seed set (the corner cell_ids it adds first
+    # are subsumed by the rectangle fill)
+    w, s, e, n = rb.bbox.T
+    _, x0, y0 = quadkey.decode(quadkey.cell_id(s, w, min_res))
+    _, x1, y1 = quadkey.decode(quadkey.cell_id(n, e, min_res))
+    nx = x1 - x0 + 1
+    per_ring = nx * (y1 - y0 + 1)
+    fowner = np.repeat(np.arange(nr), per_ring)
+    k = np.arange(len(fowner)) - np.repeat(np.cumsum(per_ring) - per_ring,
+                                           per_ring)
+    frontier = ((np.int64(min_res) << quadkey._RES_SHIFT)
+                + ((y0[fowner] + k // nx[fowner]) << quadkey._Y_SHIFT)
+                + x0[fowner] + k % nx[fowner])
 
     def emit(cells_arr, owner_arr, is_full) -> None:
         nonlocal n_out
         if len(cells_arr) == 0:
             return
-        out_cells.append(np.asarray(cells_arr, dtype=np.int64))
-        out_owner.append(np.asarray(owner_arr, dtype=np.int64))
-        out_full.append(np.broadcast_to(
-            np.asarray(is_full, dtype=bool), (len(cells_arr),)).copy())
+        out_cells.append(cells_arr)
+        out_owner.append(owner_arr)
+        out_full.append(np.full(len(cells_arr), is_full))
         n_out += np.bincount(owner_arr, minlength=nr)
 
     while len(frontier):
-        kinds = _classify_cells_multi(frontier, fowner, rs)
+        kinds = _classify_cells_multi(frontier, fowner, rb)
         fcount = np.bincount(fowner, minlength=nr)
         # per-ring cap: same trigger as compact_cover (out + WHOLE
         # frontier incl. OUTSIDE cells), same degrade (emit non-OUTSIDE
@@ -309,7 +387,7 @@ def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
                                        kinds[~capped])
             if len(frontier) == 0:
                 break
-        res = (frontier >> quadkey._RES_SHIFT).astype(np.int64)
+        res = frontier >> quadkey._RES_SHIFT
         full = kinds == FULL
         emit(frontier[full], fowner[full], True)
         at_leaf = (kinds == PARTIAL) & (res >= max_res)
@@ -319,37 +397,33 @@ def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
         if len(rc) == 0:
             break
         # 4 children via bit math (mirrors quadkey.children)
-        r_ = rc >> quadkey._RES_SHIFT
-        y_ = (rc >> quadkey._Y_SHIFT) & quadkey._MASK
-        x_ = rc & quadkey._MASK
-        cr = ((r_ + 1) << quadkey._RES_SHIFT)
+        cr = ((rc >> quadkey._RES_SHIFT) + 1) << quadkey._RES_SHIFT
+        base_y = 2 * ((rc >> quadkey._Y_SHIFT) & quadkey._MASK)
+        base_x = 2 * (rc & quadkey._MASK)
         kids = np.empty(4 * len(rc), dtype=np.int64)
-        kowner = np.repeat(ro, 4)
-        base_y = 2 * y_
-        base_x = 2 * x_
         kids[0::4] = cr + (base_y << quadkey._Y_SHIFT) + base_x
         kids[1::4] = cr + (base_y << quadkey._Y_SHIFT) + base_x + 1
         kids[2::4] = cr + ((base_y + 1) << quadkey._Y_SHIFT) + base_x
         kids[3::4] = cr + ((base_y + 1) << quadkey._Y_SHIFT) + base_x + 1
-        frontier, fowner = kids, kowner
+        frontier, fowner = kids, np.repeat(ro, 4)
 
     if not out_cells:
-        return [[] for _ in range(nr)]
-    cells = np.concatenate(out_cells)
+        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
+                np.empty(0, dtype=bool))
     owner = np.concatenate(out_owner)
-    fulls = np.concatenate(out_full)
     order = np.argsort(owner, kind="stable")
-    cells, fulls = cells[order], fulls[order]
-    counts = np.bincount(owner, minlength=nr)
-    offs = np.concatenate([[0], np.cumsum(counts)])
-    return [list(zip(cells[offs[i]:offs[i + 1]].tolist(),
-                     fulls[offs[i]:offs[i + 1]].tolist()))
-            for i in range(nr)]
+    return (owner[order], np.concatenate(out_cells)[order],
+            np.concatenate(out_full)[order])
 
 
-def cover_cells_at_res(ring, res: int, max_cells: int = 4096) -> list[int]:
-    """Flat (non-compact) cover: all res-`res` cells touching the ring."""
-    return sorted(
-        {int(c) if full else int(c)
-         for c, full in compact_cover(ring, min_res=res, max_res=res, max_cells=max_cells)}
-    )
+def cover_batch(rings: list, min_res: int = 5, max_res: int = 9,
+                max_cells: int = 4096) -> list:
+    """Per-ring list view of cover_flat: [[(cell, is_full), ...] per
+    ring], the same (cell, is_full) SETS compact_cover produces."""
+    rings = [np.asarray(r, dtype=np.float64) for r in rings]
+    owner, cells, fulls = cover_flat(RingBatch(rings), min_res, max_res,
+                                     max_cells)
+    offs = np.searchsorted(owner, np.arange(len(rings) + 1))
+    cells, fulls = cells.tolist(), fulls.tolist()
+    return [list(zip(cells[a:b], fulls[a:b]))
+            for a, b in zip(offs[:-1].tolist(), offs[1:].tolist())]

@@ -62,6 +62,24 @@ class RingSet:
         self.starts = np.concatenate([[0], np.cumsum(self.lens)[:-1]]) \
             if lens else np.empty(0, dtype=np.int64)
 
+    @classmethod
+    def from_edges(cls, ids, x1, y1, x2, y2) -> "RingSet":
+        """RingSet from flat edge arrays sorted by ring: ids[i] is the
+        ring id of edge i, and each run of equal ids is one ring's
+        edges in order. Same layout as the dict constructor."""
+        ids = np.asarray(ids)
+        rs = cls({})
+        if len(ids) == 0:
+            return rs
+        starts = np.flatnonzero(np.concatenate([[True], ids[1:] != ids[:-1]]))
+        rs.ids = ids[starts].tolist()
+        rs.idx_of = {pid: i for i, pid in enumerate(rs.ids)}
+        rs.x1, rs.y1, rs.x2, rs.y2 = (np.asarray(a, dtype=np.float64)
+                                      for a in (x1, y1, x2, y2))
+        rs.lens = np.diff(np.append(starts, len(ids))).astype(np.int64)
+        rs.starts = starts.astype(np.int64)
+        return rs
+
     def contains(self, px, py, ring_idx) -> np.ndarray:
         """Even-odd PIP for each (px[i], py[i]) against ring ring_idx[i].
 

@@ -1,8 +1,9 @@
-"""Shared machinery of the batched polygon-cover classifiers
-(ops/h3tiles + ops/s2tiles): per-group ring geometry, the CSR
-(cell, own-ring segment) pair expansion with proper-crossing tests, and
-the grouped corner-in-ring split. One implementation so a fix to the
-crossing/corner logic cannot silently diverge between the two covers.
+"""Shared crossing and corner logic of the batched H3 and S2 cover
+classifiers (ops/h3tiles + ops/s2tiles): the touching-counts-as-crossing
+edge test and the grouped corner-in-ring split that relies on it. One
+implementation so a fix to either cannot silently diverge between the
+two covers. Their ring geometry (RingBatch) lives in index/cover.py,
+next to the quadkey cover that shares it.
 """
 
 from __future__ import annotations
@@ -10,126 +11,6 @@ from __future__ import annotations
 import numpy as np
 
 from ..index.pip import RingSet, points_in_ring
-
-# pair-expansion budget: the CSR expansion materializes
-# (chunk_cells x own-ring-segments) index/coordinate temporaries BEFORE
-# bbox pruning; chunking by a pair budget (instead of a fixed cell
-# count) keeps peak temp memory bounded for arc-heavy rings with
-# thousands of segments
-_PAIR_BUDGET = 4_000_000
-_MIN_CHUNK = 1024
-_MAX_CHUNK = 65536
-
-
-# longitude strips per ring for the candidate-segment index: each ring's
-# bbox x-range is split into _N_STRIPS equal strips and every segment is
-# registered in the strips its x-interval touches; a cell then gathers
-# only the segments of its own x-range's strips — a provable SUPERSET of
-# every bbox-overlap pair test downstream (floor-mapping is monotone, so
-# overlapping x-intervals always share a strip), so verdicts are exactly
-# unchanged while the expanded pair count drops ~7-10x on the bench
-# corpus (measured; the dense expansion was the classifiers' base cost).
-_N_STRIPS = 16
-
-
-class RingBatch:
-    """CSR geometry of a batch of closed rings: concatenated edges
-    (RingSet layout), per-segment bboxes, per-ring bbox and center
-    longitude, and the per-ring x-strip segment index."""
-
-    def __init__(self, rings: list):
-        self.rings = rings
-        self.rs = RingSet({i: r for i, r in enumerate(rings)})
-        rs = self.rs
-        self.sxmin = np.minimum(rs.x1, rs.x2)
-        self.sxmax = np.maximum(rs.x1, rs.x2)
-        self.symin = np.minimum(rs.y1, rs.y2)
-        self.symax = np.maximum(rs.y1, rs.y2)
-        self.bbox = np.stack([  # (R, 4): w, s, e, n
-            np.array([r[:, 0].min() for r in rings]),
-            np.array([r[:, 1].min() for r in rings]),
-            np.array([r[:, 0].max() for r in rings]),
-            np.array([r[:, 1].max() for r in rings]),
-        ], axis=1) if rings else np.empty((0, 4))
-        self.cx = (self.bbox[:, 0] + self.bbox[:, 2]) / 2.0
-        # ---- x-strip segment index
-        nr = len(rings)
-        K = _N_STRIPS
-        self.n_strips = K
-        if nr and len(rs.x1):
-            w = self.bbox[:, 0]
-            self.strip_x0 = w
-            self.strip_w = np.maximum(
-                (self.bbox[:, 2] - w) / K, 1e-300)
-            seg_ring = np.repeat(np.arange(nr), rs.lens)
-            k0 = np.clip(((self.sxmin - w[seg_ring])
-                          / self.strip_w[seg_ring]).astype(np.int64), 0, K - 1)
-            k1 = np.clip(((self.sxmax - w[seg_ring])
-                          / self.strip_w[seg_ring]).astype(np.int64), 0, K - 1)
-            nspan = k1 - k0 + 1
-            seg_rep = np.repeat(np.arange(len(seg_ring)), nspan)
-            cum = np.cumsum(nspan)
-            within = np.arange(int(cum[-1])) - np.repeat(cum - nspan, nspan)
-            slot = seg_ring[seg_rep] * K + k0[seg_rep] + within
-            order = np.argsort(slot, kind="stable")
-            self.strip_seg = seg_rep[order]
-            counts = np.bincount(slot, minlength=nr * K)
-            self.strip_off = np.concatenate(
-                [[0], np.cumsum(counts)]).astype(np.int64)
-        else:
-            self.strip_x0 = np.zeros(nr)
-            self.strip_w = np.ones(nr)
-            self.strip_seg = np.empty(0, dtype=np.int64)
-            self.strip_off = np.zeros(nr * K + 1, dtype=np.int64)
-
-    def candidate_pairs(self, owner_chunk: np.ndarray, cxmin: np.ndarray,
-                        cxmax: np.ndarray):
-        """(crow, seg) pairs restricted to the cells' x-strips — a
-        superset (possibly with duplicates) of every (cell, own-ring
-        segment) pair whose bboxes overlap in x; all downstream
-        bbox/crossing tests still run per pair, so results are exactly
-        those of the dense expansion."""
-        K = self.n_strips
-        o = owner_chunk
-        x0 = self.strip_x0[o]
-        sw = self.strip_w[o]
-        k0 = np.clip(((cxmin - x0) / sw).astype(np.int64), 0, K - 1)
-        k1 = np.clip(((cxmax - x0) / sw).astype(np.int64), 0, K - 1)
-        # cells with no x-overlap with their ring's bbox have no
-        # overlapping segments and no contained vertices at all
-        none = (cxmax < self.bbox[o, 0]) | (cxmin > self.bbox[o, 2])
-        nst = np.where(none, 0, k1 - k0 + 1)
-        cell_rep = np.repeat(np.arange(len(o)), nst)
-        cums = np.cumsum(nst)
-        total = int(cums[-1]) if len(o) else 0
-        within = np.arange(total) - np.repeat(cums - nst, nst)
-        slot = o[cell_rep] * K + k0[cell_rep] + within
-        cnt = self.strip_off[slot + 1] - self.strip_off[slot]
-        crow = np.repeat(cell_rep, cnt)
-        cum2 = np.cumsum(cnt)
-        total2 = int(cum2[-1]) if len(slot) else 0
-        within2 = np.arange(total2) - np.repeat(cum2 - cnt, cnt)
-        seg = self.strip_seg[np.repeat(self.strip_off[slot], cnt) + within2]
-        return crow, seg
-
-    def chunk_size(self) -> int:
-        """Cell-axis chunk honoring the pair budget for this batch's
-        longest ring."""
-        max_len = int(self.rs.lens.max()) if len(self.rs.lens) else 1
-        return int(np.clip(_PAIR_BUDGET // max(1, max_len),
-                           _MIN_CHUNK, _MAX_CHUNK))
-
-
-def expand_pairs(owner_chunk: np.ndarray, rs: RingSet):
-    """(crow, seg): CSR expansion of every (cell, own-ring segment)
-    pair for one chunk of cells (crow indexes the chunk)."""
-    lens = rs.lens[owner_chunk]
-    crow = np.repeat(np.arange(len(owner_chunk)), lens)
-    cum = np.cumsum(lens)
-    within = (np.arange(int(cum[-1]) if len(owner_chunk) else 0)
-              - np.repeat(cum - lens, lens))
-    seg = np.repeat(rs.starts[owner_chunk], lens) + within
-    return crow, seg
 
 
 def _orient(px, py, qx, qy, rx, ry):

@@ -11,8 +11,9 @@ Batching architecture (round 4): all per-level kernels — boundary
 computation, classification, children generation, BFS neighbor probes —
 run ONCE per refinement level for the whole batch of rings, with cells
 carrying an `owner` ring index. Per-(cell, segment) work is restricted
-to the cell's own ring by CSR expansion over the batch's concatenated
-ring edges (the same repeat/reduceat pattern as index.pip.RingSet).
+to the cell's own ring by the x-strip candidate pairs of the batch's
+concatenated ring edges (index/cover.RingBatch, shared with the quadkey
+and S2 covers).
 The previous per-ring loop paid ~9 ms of fixed numpy-call overhead per
 cover regardless of size — ~35% of the whole bench leg at the corpus'
 median cover of ~1.7k cells.
@@ -37,8 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..index import h3
-from ._cover_common import RingBatch as _RingBatch
-from ._cover_common import corner_split, expand_pairs, proper_crossings
+from ..index.cover import RingBatch as _RingBatch
+from ._cover_common import corner_split, proper_crossings
 
 OUTSIDE, PARTIAL, FULL = 0, 1, 2
 
@@ -99,7 +100,7 @@ def _classify_multi(bnds: np.ndarray, owner: np.ndarray, rb: _RingBatch,
         cymin, cymax = hy1.min(axis=1), hy1.max(axis=1)
         # x-strip candidate pairs: exact superset of the dense
         # (cell, own-ring segment) expansion's surviving pairs at
-        # ~10% of its size (see _cover_common.RingBatch)
+        # ~10% of its size (see index/cover.RingBatch)
         crow, seg = rb.candidate_pairs(o, cxmin, cxmax)
         # vertex-in-cell first (ring vertices = segment start points):
         # even-odd crossing number of the vertex vs the cell polygon

@@ -73,7 +73,8 @@ def centroid_cell_index(centroids: DataFrame, res: int, rings: int,
     One vectorized Arrow pass: each batch computes every centroid's base
     (ix, iy) with numpy, then emits the (2*rings+1)^2 Chebyshev window
     (lat-clamped, lon-wrapped) as one frame per offset — mirroring
-    ops/pip.polygon_cell_index rather than a driver loop."""
+    the executor-side cover kernel of ops/pip.polygon_cells_at_res
+    rather than a driver loop."""
     import numpy as np
     import pandas as pd
 

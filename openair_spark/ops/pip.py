@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from ..index.cover import compact_cover, cover_batch
+from ..index.cover import RingBatch, cover_flat
 from ..index.pip import RingSet, points_in_ring
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
@@ -47,58 +47,40 @@ MIN_RES = 7
 MAX_RES = 9
 
 
+def _ring_arrays(rings) -> list:
+    """Arrow ring cells (arrays of [lon, lat] arrays) -> (n, 2) float64."""
+    return [np.asarray([list(p) for p in ring], dtype=np.float64)
+            for ring in rings]
+
+
+def _cover_rows(ids, rings: list, min_res: int,
+                max_res: int) -> tuple[RingBatch, pd.DataFrame]:
+    """Quadkey cover of every ring as cell-index columns (owner, cell,
+    polygon_id, is_full, west, south, east, north): the flat cover_flat
+    arrays plus one take per column for the owner ring's id and bbox.
+    Also returns the RingBatch, whose RingSet holds the ring edges."""
+    rb = RingBatch(rings)
+    owner, cell, is_full = cover_flat(rb, min_res, max_res)
+    bbox = rb.bbox[owner]
+    return rb, pd.DataFrame({
+        "owner": owner, "cell": cell,
+        "polygon_id": np.asarray(ids, dtype=object)[owner],
+        "is_full": is_full,
+        "west": bbox[:, 0], "south": bbox[:, 1],
+        "east": bbox[:, 2], "north": bbox[:, 3],
+    })
+
+
 def build_cell_index(polygons: list[dict], min_res: int = MIN_RES,
                      max_res: int = MAX_RES) -> pd.DataFrame:
     """polygons: [{'polygon_id': str, 'ring': [[lon,lat],...]}] ->
-    rows (cell, polygon_id, is_full, ring_json). Runs driver-side for
-    broadcast-scale polygon sets; ring_json carried only on PARTIAL rows
-    (FULL rows need no exact test) to keep the broadcast small."""
-    rows = []
-    for poly in polygons:
-        arr = np.asarray(poly["ring"], dtype=np.float64)
-        w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-        e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-        for cell, is_full in compact_cover(arr, min_res=min_res, max_res=max_res):
-            rows.append({
-                "cell": int(cell),
-                "polygon_id": poly["polygon_id"],
-                "is_full": bool(is_full),
-                "west": w, "south": s, "east": e, "north": n,
-            })
-    return pd.DataFrame(rows, columns=[
-        "cell", "polygon_id", "is_full", "west", "south", "east", "north"])
-
-
-def collect_ring_set(polygons: DataFrame) -> RingSet:
-    """Driver-side RingSet from a polygons DataFrame via FLAT edge
-    columns: nested ring arrays through toPandas materialize millions
-    of python list objects on the driver (seconds of serial time at
-    10^4+ polygons); exploding to one row per edge keeps the transfer
-    pure-numeric Arrow -> numpy."""
-    edges = polygons.select(
-        "polygon_id",
-        F.posexplode(F.expr(
-            "transform(slice(ring, 1, size(ring) - 1), "
-            "(p, i) -> struct(p[0] AS x1, p[1] AS y1, "
-            "ring[i + 1][0] AS x2, ring[i + 1][1] AS y2))")).alias("edge_idx", "e"),
-    ).select("polygon_id", "edge_idx", "e.x1", "e.y1", "e.x2", "e.y2")
-    pdf = edges.toPandas()
-    if len(pdf) == 0:
-        return RingSet({})
-    pdf = pdf.sort_values(["polygon_id", "edge_idx"], kind="stable")
-    rs = RingSet({})
-    pid_arr = pdf["polygon_id"].to_numpy()
-    bounds = np.flatnonzero(np.concatenate([[True], pid_arr[1:] != pid_arr[:-1]]))
-    counts = np.diff(np.concatenate([bounds, [len(pid_arr)]]))
-    rs.ids = [pid_arr[b] for b in bounds]
-    rs.idx_of = {pid: i for i, pid in enumerate(rs.ids)}
-    rs.x1 = pdf["x1"].to_numpy(dtype=np.float64)
-    rs.y1 = pdf["y1"].to_numpy(dtype=np.float64)
-    rs.x2 = pdf["x2"].to_numpy(dtype=np.float64)
-    rs.y2 = pdf["y2"].to_numpy(dtype=np.float64)
-    rs.lens = counts.astype(np.int64)
-    rs.starts = bounds.astype(np.int64)
-    return rs
+    rows (cell, polygon_id, is_full, west, south, east, north). Runs
+    driver-side for broadcast-scale polygon sets."""
+    _, rows = _cover_rows(
+        [p["polygon_id"] for p in polygons],
+        [np.asarray(p["ring"], dtype=np.float64) for p in polygons],
+        min_res, max_res)
+    return rows.drop(columns="owner")
 
 
 def _point_cells_expr(lat_col: str, lon_col: str, cover_resolutions: list[int]):
@@ -120,40 +102,29 @@ _SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
 def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame:
     """One executor pass emitting BOTH broadcast-route inputs: cover
     index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and ring edge
-    rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge). The previous shape ran
-    collect_ring_set (JVM explode) and polygon_cell_index (Arrow cover
-    kernel) as two separate jobs over the persisted polygon side; one
-    combined scan halves the setup job count the bench pays per call."""
+    rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge) — one scan of the
+    persisted polygon side instead of one job per input."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in _SETUP_SCHEMA.split(", ")]
         for pdf in batches:
-            frames = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=min_res, max_res=max_res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                ne = len(arr) - 1
-                frames.append(pd.DataFrame({
-                    "polygon_id": pid,
-                    "kind": np.concatenate([np.zeros(len(cover), dtype=np.int32),
-                                            np.ones(ne, dtype=np.int32)]),
-                    "a": np.concatenate([
-                        np.asarray([c for c, _ in cover], dtype=np.int64),
-                        np.arange(ne, dtype=np.int64)]),
-                    "b": np.concatenate([
-                        np.asarray([1 if f else 0 for _, f in cover],
-                                   dtype=np.int32),
-                        np.zeros(ne, dtype=np.int32)]),
-                    "x1": np.concatenate([np.full(len(cover), w), arr[:-1, 0]]),
-                    "y1": np.concatenate([np.full(len(cover), s), arr[:-1, 1]]),
-                    "x2": np.concatenate([np.full(len(cover), e), arr[1:, 0]]),
-                    "y2": np.concatenate([np.full(len(cover), n), arr[1:, 1]]),
-                }))
-            yield (pd.concat(frames, ignore_index=True)[cols] if frames
-                   else pd.DataFrame(columns=cols))
+            ids = pdf["polygon_id"].to_numpy(dtype=object)
+            rb, cov = _cover_rows(ids, _ring_arrays(pdf["ring"]),
+                                  min_res, max_res)
+            rs = rb.rs
+            eowner = np.repeat(np.arange(len(ids)), rs.lens)
+            yield pd.DataFrame({
+                "polygon_id": np.concatenate([cov["polygon_id"].to_numpy(),
+                                              ids[eowner]]),
+                "kind": np.repeat(np.int32([0, 1]), [len(cov), len(eowner)]),
+                "a": np.concatenate([cov["cell"].to_numpy(),
+                                     np.arange(len(eowner)) - rs.starts[eowner]]),
+                "b": np.concatenate([cov["is_full"].to_numpy(dtype=np.int32),
+                                     np.zeros(len(eowner), dtype=np.int32)]),
+                "x1": np.concatenate([cov["west"].to_numpy(), rs.x1]),
+                "y1": np.concatenate([cov["south"].to_numpy(), rs.y1]),
+                "x2": np.concatenate([cov["east"].to_numpy(), rs.x2]),
+                "y2": np.concatenate([cov["north"].to_numpy(), rs.y2]),
+            })
 
     return polygons.select("polygon_id", "ring").mapInPandas(
         kernel, _SETUP_SCHEMA)
@@ -161,24 +132,13 @@ def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame
 
 def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
     """Driver-side split of the _polygon_setup output into the RingSet
-    (CSR edge arrays, same layout as collect_ring_set) and the cover
-    index frame (same columns as polygon_cell_index + polygon_idx)."""
-    edges = pdf[pdf["kind"] == 1]
-    rs = RingSet({})
-    if len(edges):
-        edges = edges.sort_values(["polygon_id", "a"], kind="stable")
-        pid_arr = edges["polygon_id"].to_numpy()
-        bounds = np.flatnonzero(
-            np.concatenate([[True], pid_arr[1:] != pid_arr[:-1]]))
-        counts = np.diff(np.concatenate([bounds, [len(pid_arr)]]))
-        rs.ids = [pid_arr[b] for b in bounds]
-        rs.idx_of = {pid: i for i, pid in enumerate(rs.ids)}
-        rs.x1 = edges["x1"].to_numpy(dtype=np.float64)
-        rs.y1 = edges["y1"].to_numpy(dtype=np.float64)
-        rs.x2 = edges["x2"].to_numpy(dtype=np.float64)
-        rs.y2 = edges["y2"].to_numpy(dtype=np.float64)
-        rs.lens = counts.astype(np.int64)
-        rs.starts = bounds.astype(np.int64)
+    of the edge rows and the cover index frame (build_cell_index
+    columns with polygon_idx in place of polygon_id)."""
+    edges = pdf[pdf["kind"] == 1].sort_values(["polygon_id", "a"],
+                                               kind="stable")
+    rs = RingSet.from_edges(
+        edges["polygon_id"].to_numpy(),
+        *(edges[c].to_numpy(dtype=np.float64) for c in ("x1", "y1", "x2", "y2")))
     cov = pdf[pdf["kind"] == 0]
     index_pdf = pd.DataFrame({
         "cell": cov["a"].to_numpy(dtype=np.int64),
@@ -191,35 +151,6 @@ def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
     return rs, index_pdf
 
 
-def polygon_cell_index(polygons: DataFrame, min_res: int = MIN_RES,
-                       max_res: int = MAX_RES) -> DataFrame:
-    """Executor-parallel cover computation: polygons(polygon_id, ring)
-    -> (cell, polygon_id, is_full, bbox). A narrow mapInPandas — at
-    10^5+ polygons the driver never materializes the ring set; Spark
-    broadcasts the computed index directly. The bbox lets the join
-    prefilter candidates JVM-side before the exact-PIP kernel."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split()[0] for c in CELL_INDEX_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=min_res, max_res=max_res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                for cell, is_full in cover:
-                    rows.append({
-                        "cell": int(cell), "polygon_id": pid,
-                        "is_full": bool(is_full),
-                        "west": w, "south": s, "east": e, "north": n,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return polygons.select("polygon_id", "ring").mapInPandas(kernel, CELL_INDEX_SCHEMA)
-
-
 # routing decision of the most recent pip_join call ("broadcast" |
 # "shuffle") — introspection hook for tests and ops debugging
 LAST_ROUTE: str | None = None
@@ -229,7 +160,7 @@ LAST_ROUTE: str | None = None
 # rows; 4M edges ~ 128 MB broadcast — roughly Spark's own 8G-executor
 # comfort zone for autoBroadcastJoinThreshold-style decisions. Beyond
 # it, pip_join auto-routes to the salted shuffle variant instead of
-# OOMing the driver on collect_ring_set (the round-4 100x-scale seam).
+# OOMing the driver on the ring set (the round-4 100x-scale seam).
 DEFAULT_MAX_BROADCAST_EDGES = 4_000_000
 
 
@@ -273,7 +204,6 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
                                     lon_col=lon_col, res=7)
             return hits.drop("cell")
         # one combined scan yields the ring edges AND the cover index
-        # (was two jobs: collect_ring_set + polygon_cell_index)
         ring_set, index_pdf = _split_setup(
             _polygon_setup(polys_persisted, min_res, max_res).toPandas())
         polys_persisted.unpersist()
@@ -375,8 +305,8 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
 def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
     """Executor-parallel shuffle-join input: polygons(polygon_id, ring)
     -> (cell, polygon_id, is_full, west..north bbox, ring_json) with one
-    row per covering cell at the fixed resolution (compact_cover pinned
-    to min=max=res yields every intersecting cell). The ring travels as
+    row per covering cell at the fixed resolution (the quadkey cover
+    pinned to min=max=res yields every intersecting cell). The ring travels as
     JSON so the shuffle variant can evaluate the exact test without any
     driver-side or broadcast ring materialization; is_full and the bbox
     let pip_join_shuffle skip the exact test for interior cells and
@@ -384,23 +314,13 @@ def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
     previously ray-cast every cell-sharing candidate)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["cell", "polygon_id", "is_full",
-                "west", "south", "east", "north", "ring_json"]
         for pdf in batches:
-            rows = []
-            arrs = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                    for ring in pdf["ring"]]
-            covers = cover_batch(arrs, min_res=res, max_res=res)
-            for pid, arr, cover in zip(pdf["polygon_id"], arrs, covers):
-                rj = json.dumps(arr.tolist())
-                w, s = float(arr[:, 0].min()), float(arr[:, 1].min())
-                e, n = float(arr[:, 0].max()), float(arr[:, 1].max())
-                for cell, is_full in cover:
-                    rows.append({"cell": int(cell), "polygon_id": pid,
-                                 "is_full": bool(is_full),
-                                 "west": w, "south": s, "east": e, "north": n,
-                                 "ring_json": rj})
-            yield pd.DataFrame(rows, columns=cols)
+            rings = _ring_arrays(pdf["ring"])
+            _, rows = _cover_rows(pdf["polygon_id"], rings, res, res)
+            ring_json = np.asarray([json.dumps(r.tolist()) for r in rings],
+                                   dtype=object)
+            rows["ring_json"] = ring_json[rows.pop("owner").to_numpy()]
+            yield rows
 
     return polygons.select("polygon_id", "ring").mapInPandas(
         kernel, "cell long, polygon_id string, is_full boolean, "

@@ -34,7 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..index import s2
-from ._cover_common import RingBatch, corner_split, expand_pairs, proper_crossings
+from ..index.cover import RingBatch
+from ._cover_common import corner_split, proper_crossings
 
 OUTSIDE, PARTIAL, FULL = 0, 1, 2
 # straight lon/lat chords understate the geodesic cell edges; 5% corner
@@ -136,7 +137,7 @@ def _classify_level_multi(cells: np.ndarray, owner: np.ndarray, level: int,
         cxmin, cxmax = hx1.min(axis=1), hx1.max(axis=1)
         cymin, cymax = hy1.min(axis=1), hy1.max(axis=1)
         # x-strip candidate pairs (exact superset of the bbox-pruned
-        # dense expansion; see _cover_common.RingBatch)
+        # dense expansion; see index/cover.RingBatch)
         crow, seg = rb.candidate_pairs(o, cxmin, cxmax)
         keep = ((cxmin[crow] <= rb.sxmax[seg]) & (cxmax[crow] >= rb.sxmin[seg])
                 & (cymin[crow] <= rb.symax[seg]) & (cymax[crow] >= rb.symin[seg]))

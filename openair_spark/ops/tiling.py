@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..index import h3, quadkey, s2
-from ..index.cover import compact_cover, cover_batch
+from ..index.cover import RingBatch, cover_flat
 
 TILES_SCHEMA = (
     "url string, airspace_idx int, cell long, res int, is_full boolean, "
@@ -51,32 +51,18 @@ def _tile_kernel(batches: Iterator[pd.DataFrame], min_res: int, max_res: int,
         h3.seed_tables(h3_tables)
     cols = [c.split()[0] for c in TILES_SCHEMA.split(", ")]
     for pdf in batches:
-        keep: list = []
-        rings: list = []
-        for url, idx, ring in zip(pdf["url"], pdf["airspace_idx"], pdf["ring"]):
-            if ring is None or len(ring) < 4:
-                continue
-            keep.append((url, int(idx)))
-            rings.append(np.asarray([list(p) for p in ring], dtype=np.float64))
-        # whole-batch covers in ONE level-batched call (round 6; the
-        # per-ring compact_cover loop was numpy-call-overhead-bound)
-        covers = cover_batch(rings, min_res=min_res, max_res=max_res)
-        urls: list = []
-        idxs: list = []
-        cells: list = []
-        fulls: list = []
-        for (url, idx), cov in zip(keep, covers):
-            for cell, is_full in cov:
-                urls.append(url)
-                idxs.append(int(idx))
-                cells.append(int(cell))
-                fulls.append(bool(is_full))
-        if not cells:
+        pdf = pdf[np.array([ring is not None and len(ring) >= 4
+                            for ring in pdf["ring"]], dtype=bool)]
+        rings = [np.asarray([list(p) for p in ring], dtype=np.float64)
+                 for ring in pdf["ring"]]
+        # whole-batch covers in ONE level-batched call; url and
+        # airspace_idx follow each cell by its owner ring
+        owner, carr, fulls = cover_flat(RingBatch(rings), min_res, max_res)
+        if not len(carr):
             yield pd.DataFrame(columns=cols)
             continue
         # decode / bounds / sibling cell ids for the WHOLE batch at once
         # (per-cell scalar calls were the kernel's hot spot)
-        carr = np.asarray(cells, dtype=np.int64)
         res, _, _ = quadkey.decode(carr)
         west, south, east, north = quadkey.cell_bounds(carr)
         clat = (south + north) / 2.0
@@ -91,8 +77,8 @@ def _tile_kernel(batches: Iterator[pd.DataFrame], min_res: int, max_res: int,
             m = h3r == hr
             h3c[m] = h3.latlng_to_cell(clat[m], clon[m], int(hr))
         yield pd.DataFrame({
-            "url": urls,
-            "airspace_idx": np.asarray(idxs, dtype=np.int32),
+            "url": pdf["url"].to_numpy(dtype=object)[owner],
+            "airspace_idx": pdf["airspace_idx"].to_numpy().astype(np.int32)[owner],
             "cell": carr,
             "res": res.astype(np.int32),
             "is_full": fulls,

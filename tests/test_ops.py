@@ -222,18 +222,19 @@ def test_mega_polygon_skew_split_and_pip(spark):
     assert hits == {("deep-inside", "fir"), ("in-both", "fir"), ("in-both", "small")}
 
 
-def test_collect_ring_set_flat_edges(spark):
-    """collect_ring_set builds the same CSR edge arrays as the
-    nested-list constructor, and tolerates an empty polygon set."""
+def test_setup_ring_set_flat_edges(spark):
+    """The broadcast route's setup pass (_polygon_setup edge rows ->
+    _split_setup -> RingSet.from_edges) builds the same CSR edge arrays
+    as the nested-list constructor, and tolerates an empty polygon set."""
     import numpy as np
 
     from openair_spark.index.pip import RingSet
-    from openair_spark.ops.pip import collect_ring_set
+    from openair_spark.ops.pip import _polygon_setup, _split_setup
 
     polys = [(pid, [[float(i), float(i)] for i in range(n)] + [[0.0, 0.0]])
              for pid, n in (("a", 4), ("b", 6), ("c", 3))]
     df = spark.createDataFrame(polys, "polygon_id string, ring array<array<double>>")
-    flat = collect_ring_set(df)
+    flat, _ = _split_setup(_polygon_setup(df, 7, 9).toPandas())
     ref = RingSet({pid: np.asarray(ring) for pid, ring in polys})
     for pid in ("a", "b", "c"):
         i, j = flat.idx_of[pid], ref.idx_of[pid]
@@ -244,8 +245,42 @@ def test_collect_ring_set_flat_edges(spark):
             assert (getattr(flat, attr)[sl_f] == getattr(ref, attr)[sl_r]).all()
 
     empty = spark.createDataFrame([], "polygon_id string, ring array<array<double>>")
-    rs = collect_ring_set(empty)
-    assert rs.ids == [] and len(rs.x1) == 0
+    rs, index_pdf = _split_setup(_polygon_setup(empty, 7, 9).toPandas())
+    assert rs.ids == [] and len(rs.x1) == 0 and len(index_pdf) == 0
+
+
+def test_tile_kernel_matches_compact_cover():
+    """polygon_tiles' batch function, driven without Spark: a None ring
+    and a ring of fewer than 4 points are skipped; every other
+    (url, airspace_idx) gets exactly compact_cover's (cell, is_full)
+    set, `res` is each cell's own resolution and h3_res clamps it to
+    the H3 band 5-9."""
+    import pandas as pd
+
+    from openair_spark.index.cover import compact_cover
+    from openair_spark.ops.tiling import _tile_kernel
+
+    rows = [("u0", 0, _ring(10.0, 50.0, 1.0)),
+            ("u1", 0, None),
+            ("u1", 1, [[0.0, 0.0], [1.0, 0.0], [0.0, 0.0]]),
+            # contains the res-4 cell [0, 22.5] x [0, 11.25]: FULL at res 4
+            ("u2", 0, _ring(11.25, 5.6, 12.0)),
+            ("u2", 1, [[5.0, 40.0], [6.5, 40.2], [5.4, 41.0], [5.0, 40.0]])]
+    pdf = pd.DataFrame(rows, columns=["url", "airspace_idx", "ring"])
+    out = pd.concat(list(_tile_kernel(iter([pdf]), 4, 10)), ignore_index=True)
+
+    got: dict = {}
+    for r in out.itertuples():
+        got.setdefault((r.url, int(r.airspace_idx)), set()).add(
+            (int(r.cell), bool(r.is_full)))
+    want = {(url, idx): {(int(c), bool(f))
+                         for c, f in compact_cover(np.asarray(ring), 4, 10)}
+            for url, idx, ring in rows if ring is not None and len(ring) >= 4}
+    assert got == want
+    res = out["res"].to_numpy()
+    assert (res == out["cell"].to_numpy() >> quadkey._RES_SHIFT).all()
+    assert (out["h3_res"].to_numpy() == np.clip(res, 5, 9)).all()
+    assert {4, 10} <= set(res.tolist())  # both clamp sides exercised
 
 
 def test_h3_cover_antimeridian_superset():

@@ -198,14 +198,16 @@ def test_corner_shortcut_equals_full_corner_verification():
 
 
 def test_cover_batch_matches_compact_cover():
-    """cover_batch (round-6 level-batched quadkey covers) must produce
-    the same per-ring (cell, is_full) SET as compact_cover for random
+    """cover_flat (the level-batched quadkey cover engine) and its
+    per-ring view cover_batch must produce the same per-ring
+    (cell, is_full) SET as compact_cover for random
     convex / grid-aligned / star rings — including tight max_cells caps
     (the degrade path) and flat res bands. Also verified once over the
     full 9,484-ring bench corpus at res 5-9, 7-9 and 7-7: 0 mismatches."""
     import numpy as np
 
-    from openair_spark.index.cover import compact_cover, cover_batch
+    from openair_spark.index.cover import (RingBatch, compact_cover,
+                                           cover_batch, cover_flat)
 
     rng = np.random.default_rng(11)
     rings = []
@@ -236,7 +238,14 @@ def test_cover_batch_matches_compact_cover():
     for lo, hi, cap in ((5, 9, 4096), (7, 9, 4096), (7, 7, 4096),
                         (5, 9, 64), (5, 8, 16)):
         batched = cover_batch(rings, lo, hi, max_cells=cap)
+        owner, cells, fulls = cover_flat(RingBatch(rings), lo, hi,
+                                         max_cells=cap)
+        assert (np.diff(owner) >= 0).all()  # owner-sorted
         for i, r in enumerate(rings):
-            single = compact_cover(r, lo, hi, max_cells=cap)
-            assert (set((int(c), bool(f)) for c, f in batched[i])
-                    == set((int(c), bool(f)) for c, f in single)), (lo, hi, cap, i)
+            want = set((int(c), bool(f))
+                       for c, f in compact_cover(r, lo, hi, max_cells=cap))
+            flat = list(zip(cells[owner == i].tolist(),
+                            fulls[owner == i].tolist()))
+            for got in (batched[i], flat):
+                assert (set((int(c), bool(f)) for c, f in got)
+                        == want), (lo, hi, cap, i)

@@ -1,11 +1,13 @@
-"""Per-phase profiling of the expensive bench legs (guide §1: measure
-first). Mirrors bench.py's session config exactly; times each driver
-action inside a leg separately so the slow phase is identified, not
-guessed. Usage:
+"""Per-leg profiling of the expensive text-query bench legs (guide §1:
+measure first). Mirrors bench.py's session config exactly. Usage:
 
-  python tools/leg_profile.py pip|h3|minhash|ann [repeats]
+  python tools/leg_profile.py minhash|ann [repeats]
 
-Prints one JSON line per repeat with the phase timings.
+Prints one JSON line per repeat with the leg timing. The spatial legs
+are profiled by the layered benchmark instead:
+`python3 perfbench/run.py --workload join --trace 1` reports the PIP
+join's setup (ops.pip.setup) and probe (ops.pip.probe) phases; every
+traced run also times the H3 cover kernel and operator (ops.h3tiles).
 """
 
 from __future__ import annotations
@@ -31,64 +33,6 @@ def session(cpus="32"):
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-
-
-def profile_pip(spark, sf, feats):
-    """pip_run split into its driver-visible phases."""
-    from pyspark.sql import functions as F
-
-    from openair_spark.ops import pip as pip_mod
-    from openair_spark.ops.pip import (collect_ring_set, polygon_cell_index,
-                                       pip_join)
-
-    t: dict[str, float] = {}
-
-    def mark(name, t0):
-        t[name] = round(time.time() - t0, 3)
-
-    f = feats.where(F.col("success") & (F.col("geometry_type") == "Polygon"))
-    polys = f.select(
-        F.concat_ws("#", "url", "airspace_idx").alias("polygon_id"), "ring")
-
-    t0 = time.time()
-    pp = polys.select("polygon_id", "ring").persist()
-    n_edges = pp.agg(F.sum(F.size("ring") - 1).alias("e")).collect()[0]["e"]
-    mark("persist_edge_agg", t0)
-    t["n_edges"] = int(n_edges)
-
-    t0 = time.time()
-    rs = collect_ring_set(pp)
-    mark("collect_ring_set", t0)
-    t["n_polys"] = len(rs.ids)
-
-    t0 = time.time()
-    index_pdf = polygon_cell_index(pp, 5, 9).toPandas()
-    mark("cell_index", t0)
-    t["n_index_rows"] = len(index_pdf)
-    pp.unpersist()
-
-    # full joined count (the whole leg, as bench.py times it)
-    t0 = time.time()
-    n_points = 2_000_000
-    points = spark.range(0, n_points).selectExpr(
-        "id AS point_id",
-        "(30.0e0 + (id * 40093) % 35000 / 1000.0e0) AS lat",
-        "(-12.0e0 + (id * 69697) % 45000 / 1000.0e0) AS lon",
-    )
-    n = pip_join(points, polys).count()
-    mark("full_leg", t0)
-    t["n_hits"] = n
-    return t
-
-
-def profile_h3(spark, sf, feats):
-    from openair_spark.ops.h3tiles import h3_polygon_tiles
-    t = {}
-    t0 = time.time()
-    n = h3_polygon_tiles(feats, 5, 9).count()
-    t["full_leg"] = round(time.time() - t0, 3)
-    t["rows"] = n
-    return t
 
 
 def profile_minhash(spark, sf_dir, feats):
@@ -121,8 +65,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     feats = spark.read.parquet("/tmp/spark_graft_bench/features")
     feats.limit(16).count()
-    fn = {"pip": profile_pip, "h3": profile_h3,
-          "minhash": profile_minhash, "ann": profile_ann}[leg]
+    fn = {"minhash": profile_minhash, "ann": profile_ann}[leg]
     for i in range(repeats):
         t0 = time.time()
         t = fn(spark, sf_dir, feats)
