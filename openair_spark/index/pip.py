@@ -1,5 +1,5 @@
 """Vectorized point-in-polygon (ray cast), the exact-join kernel behind
-the salted broadcast PIP join (north rule).
+the broadcast PIP probe (north rule).
 
 Even-odd rule with the standard half-open edge convention
 (y1 <= y < y2), numpy-vectorized over points x edges. Boundary points

@@ -1,15 +1,15 @@
-"""Salted broadcast point-in-polygon join (north rule).
+"""Broadcast point-in-polygon join (north rule).
 
 Plan shape (for 10^12 points x ~10^5 polygons):
 
-  polygons --driver--> compact covers --> cell index rows
-      (cell, polygon_id, is_full, ring)          [small: broadcast]
-  points  --map--> cell = quadkey(point, res per cover row's res range)
-  join    points x broadcast(cell_index) on cell  [NO shuffle]
-  exact   is_full rows skip PIP; partial rows run the vectorized
-          ray-cast in one Arrow-batched kernel
+  polygons --one set-up pass--> cell-sorted quadkey cover index
+      (cell, polygon_idx, is_full, bbox) + RingSet   [small: broadcast]
+  points   --one mapInArrow--> per Arrow batch: the point's cell at each
+      cover resolution, searchsorted into the index, inclusive bbox
+      prefilter, FULL cells pass untested, PARTIAL ones are ray-cast
+                                                     [NO join, NO shuffle]
 
-Skew: a broadcast join has no shuffle skew, but a hot *cell* (dense
+Skew: a broadcast probe has no shuffle skew, but a hot *cell* (dense
 megacity airspace) still concentrates exact-PIP work in whichever tasks
 scan those points. Because candidate work is per-point-row and the scan
 partitioning is independent of cell, hot cells are already spread across
@@ -26,22 +26,23 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..index import quadkey
 from ..index.cover import RingBatch, cover_flat
 from ..index.pip import RingSet, points_in_ring
 
 # Cover band for the PIP probe index. min 7 (not the tile mandate's 5):
-# every cover resolution the index USES adds one exploded probe row PER
-# POINT, so a few coarse res-5/6 FULL cells taxed every point with two
-# extra probe rows (10M instead of 6M for 2M points on the bench
-# corpus). At min 7 polygon interiors compact to res-7 FULL cells
-# instead — same is_full ray-cast skip — up to the per-ring cell cap;
+# every cover resolution the index USES adds one cell lookup PER POINT,
+# so a few coarse res-5/6 FULL cells taxed every point with two extra
+# probes (10M instead of 6M for 2M points on the bench corpus). At min 7
+# polygon interiors compact to res-7 FULL cells instead — same is_full
+# ray-cast skip — up to the per-ring cell cap;
 # measured: identical index size at the 10x corpus (401,112 vs 401,116
 # rows), small consistent win at sf0.1. Hit sets identical either way —
-# the cover res band is an internal knob of the candidate join, not
+# the cover res band is an internal knob of the candidate probe, not
 # part of the result.
 MIN_RES = 7
 MAX_RES = 9
@@ -71,75 +72,51 @@ def _cover_rows(ids, rings: list, min_res: int,
     })
 
 
-def build_cell_index(polygons: list[dict], min_res: int = MIN_RES,
-                     max_res: int = MAX_RES) -> pd.DataFrame:
-    """polygons: [{'polygon_id': str, 'ring': [[lon,lat],...]}] ->
-    rows (cell, polygon_id, is_full, west, south, east, north). Runs
-    driver-side for broadcast-scale polygon sets."""
-    _, rows = _cover_rows(
-        [p["polygon_id"] for p in polygons],
-        [np.asarray(p["ring"], dtype=np.float64) for p in polygons],
-        min_res, max_res)
-    return rows.drop(columns="owner")
-
-
-def _point_cells_expr(lat_col: str, lon_col: str, cover_resolutions: list[int]):
-    """Array of the point's cell ids at every resolution the cover uses —
-    pure Spark SQL so the join key computation stays JVM-side."""
-    return F.array(*[
-        F.expr(quadkey.sql_cell_expr(lat_col, lon_col, res))
-        for res in cover_resolutions
-    ])
-
-
-CELL_INDEX_SCHEMA = ("cell long, polygon_id string, is_full boolean, "
-                     "west double, south double, east double, north double")
-
 _SETUP_SCHEMA = ("polygon_id string, kind int, a long, b int, "
                  "x1 double, y1 double, x2 double, y2 double")
 
 
+def _setup_rows(pdf: pd.DataFrame, min_res: int, max_res: int) -> pd.DataFrame:
+    """polygons (polygon_id, ring) -> the broadcast route's set-up rows:
+    cover index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and ring
+    edge rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge)."""
+    ids = pdf["polygon_id"].to_numpy(dtype=object)
+    rb, cov = _cover_rows(ids, _ring_arrays(pdf["ring"]), min_res, max_res)
+    rs = rb.rs
+    eowner = np.repeat(np.arange(len(ids)), rs.lens)
+    return pd.DataFrame({
+        "polygon_id": np.concatenate([cov["polygon_id"].to_numpy(),
+                                      ids[eowner]]),
+        "kind": np.repeat(np.int32([0, 1]), [len(cov), len(eowner)]),
+        "a": np.concatenate([cov["cell"].to_numpy(),
+                             np.arange(len(eowner)) - rs.starts[eowner]]),
+        "b": np.concatenate([cov["is_full"].to_numpy(dtype=np.int32),
+                             np.zeros(len(eowner), dtype=np.int32)]),
+        "x1": np.concatenate([cov["west"].to_numpy(), rs.x1]),
+        "y1": np.concatenate([cov["south"].to_numpy(), rs.y1]),
+        "x2": np.concatenate([cov["east"].to_numpy(), rs.x2]),
+        "y2": np.concatenate([cov["north"].to_numpy(), rs.y2]),
+    })
+
+
 def _polygon_setup(polygons: DataFrame, min_res: int, max_res: int) -> DataFrame:
-    """One executor pass emitting BOTH broadcast-route inputs: cover
-    index rows (kind=0: a=cell, b=is_full, x1..y2=bbox) and ring edge
-    rows (kind=1: a=edge_idx, x1,y1,x2,y2=edge) — one scan of the
-    persisted polygon side instead of one job per input."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["polygon_id"].to_numpy(dtype=object)
-            rb, cov = _cover_rows(ids, _ring_arrays(pdf["ring"]),
-                                  min_res, max_res)
-            rs = rb.rs
-            eowner = np.repeat(np.arange(len(ids)), rs.lens)
-            yield pd.DataFrame({
-                "polygon_id": np.concatenate([cov["polygon_id"].to_numpy(),
-                                              ids[eowner]]),
-                "kind": np.repeat(np.int32([0, 1]), [len(cov), len(eowner)]),
-                "a": np.concatenate([cov["cell"].to_numpy(),
-                                     np.arange(len(eowner)) - rs.starts[eowner]]),
-                "b": np.concatenate([cov["is_full"].to_numpy(dtype=np.int32),
-                                     np.zeros(len(eowner), dtype=np.int32)]),
-                "x1": np.concatenate([cov["west"].to_numpy(), rs.x1]),
-                "y1": np.concatenate([cov["south"].to_numpy(), rs.y1]),
-                "x2": np.concatenate([cov["east"].to_numpy(), rs.x2]),
-                "y2": np.concatenate([cov["north"].to_numpy(), rs.y2]),
-            })
-
+    """_setup_rows as one executor pass over the persisted polygon side:
+    one scan yields both the cover index and the ring edges."""
     return polygons.select("polygon_id", "ring").mapInPandas(
-        kernel, _SETUP_SCHEMA)
+        lambda batches: (_setup_rows(pdf, min_res, max_res) for pdf in batches),
+        _SETUP_SCHEMA)
 
 
-def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
-    """Driver-side split of the _polygon_setup output into the RingSet
-    of the edge rows and the cover index frame (build_cell_index
-    columns with polygon_idx in place of polygon_id)."""
+def _split_setup(pdf: pd.DataFrame) -> tuple[RingSet, pd.DataFrame]:
+    """Driver-side split of the set-up rows into the RingSet of the edge
+    rows and the cover index frame (cell, polygon_idx, is_full, west,
+    south, east, north), sorted by cell."""
     edges = pdf[pdf["kind"] == 1].sort_values(["polygon_id", "a"],
                                                kind="stable")
     rs = RingSet.from_edges(
         edges["polygon_id"].to_numpy(),
         *(edges[c].to_numpy(dtype=np.float64) for c in ("x1", "y1", "x2", "y2")))
-    cov = pdf[pdf["kind"] == 0]
+    cov = pdf[pdf["kind"] == 0].sort_values("a", kind="stable")
     index_pdf = pd.DataFrame({
         "cell": cov["a"].to_numpy(dtype=np.int64),
         "polygon_idx": cov["polygon_id"].map(rs.idx_of).to_numpy(
@@ -149,6 +126,71 @@ def _split_setup(pdf: "pd.DataFrame") -> tuple[RingSet, "pd.DataFrame"]:
         "east": cov["x2"].to_numpy(), "north": cov["y2"].to_numpy(),
     })
     return rs, index_pdf
+
+
+def _broadcast_probe(points: DataFrame, polygons, lon_col: str, lat_col: str,
+                     min_res: int, max_res: int) -> DataFrame:
+    """points rows + polygon_id for every (point, polygon) containment
+    pair, as one mapInArrow over `points` (no join, no explode).
+
+    polygons: a DataFrame(polygon_id, ring) or a driver-side list
+    [{'polygon_id', 'ring'}]; either runs the same set-up kernel, then
+    the cell-sorted cover index and the RingSet travel in one broadcast.
+    Per Arrow batch the kernel computes each point's cell at every
+    resolution the index uses, finds the cover entries of that cell with
+    two searchsorted calls, keeps the (point, entry) pairs inside the
+    polygon's inclusive bbox, passes FULL-cell pairs untested and
+    ray-casts the PARTIAL ones. Null or NaN coordinates fail the bbox
+    test, so such points get no hit."""
+    if isinstance(polygons, DataFrame):
+        setup = _polygon_setup(polygons, min_res, max_res).toPandas()
+    else:
+        setup = _setup_rows(pd.DataFrame({
+            "polygon_id": [p["polygon_id"] for p in polygons],
+            "ring": [p["ring"] for p in polygons]}), min_res, max_res)
+    rs, index = _split_setup(setup)
+    cells = index["cell"].to_numpy()
+    # probe only the resolutions the cover uses: small polygons put
+    # every cover leaf at max_res
+    resolutions = np.unique(cells >> quadkey._RES_SHIFT).tolist() or [min_res]
+    index_b = points.sparkSession.sparkContext.broadcast((
+        cells, index["polygon_idx"].to_numpy(), index["is_full"].to_numpy(),
+        index[["west", "south", "east", "north"]].to_numpy(), rs))
+    lon_i = points.columns.index(lon_col)
+    lat_i = points.columns.index(lat_col)
+
+    def probe_kernel(batches):
+        import pyarrow as pa
+
+        cells, pidx, is_full, bbox, rs = index_b.value
+        ids = pa.array(rs.ids, pa.string())
+        for batch in batches:
+            # via numpy, not an Arrow cast: Arrow's decimal -> float64
+            # cast is not correctly rounded; nulls become NaN
+            lon, lat = (np.asarray(batch.column(i).to_numpy(zero_copy_only=False),
+                                   dtype=np.float64) for i in (lon_i, lat_i))
+            # NaN coordinates cast to an arbitrary cell; the bbox test
+            # below drops them
+            with np.errstate(invalid="ignore"):
+                q = np.stack([quadkey.cell_id(lat, lon, r) for r in resolutions],
+                             axis=1).ravel()
+            lo = np.searchsorted(cells, q, "left")
+            cnt = np.searchsorted(cells, q, "right") - lo
+            row = np.repeat(np.arange(batch.num_rows).repeat(len(resolutions)), cnt)
+            ent = np.arange(cnt.sum()) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+            x, y, b = lon[row], lat[row], bbox[ent]
+            keep = (x >= b[:, 0]) & (x <= b[:, 2]) & (y >= b[:, 1]) & (y <= b[:, 3])
+            row, ent, x, y = row[keep], ent[keep], x[keep], y[keep]
+            keep = is_full[ent]
+            part = np.flatnonzero(~keep)
+            keep[part] = rs.contains(x[part], y[part], pidx[ent[part]])
+            out = batch.take(pa.array(row[keep]))
+            yield pa.RecordBatch.from_arrays(
+                [*out.columns, ids.take(pa.array(pidx[ent[keep]]))],
+                names=[*out.schema.names, "polygon_id"])
+
+    return points.mapInArrow(probe_kernel, StructType(
+        points.schema.fields + [StructField("polygon_id", StringType())]))
 
 
 # routing decision of the most recent pip_join call ("broadcast" |
@@ -175,131 +217,40 @@ def pip_join(points: DataFrame, polygons, lat_col: str = "lat", lon_col: str = "
 
     Routing: a DataFrame polygon side is sized first (one cheap edge-sum
     aggregate that also fills the persist). At or under
-    `max_broadcast_edges` total edges the broadcast plan runs (cover
-    computed executor-side, rings travel once as a broadcast variable,
-    NO shuffle); above it the salted shuffle plan (`pip_join_shuffle`)
-    runs instead — the polygon side never materializes on the driver.
-    Both produce identical (point, polygon_id) hit sets."""
+    `max_broadcast_edges` total edges the broadcast probe runs (cover
+    computed executor-side, index and rings travel once as a broadcast
+    variable, NO shuffle); above it the salted shuffle plan
+    (`pip_join_shuffle`) runs instead — the polygon side never
+    materializes on the driver. Both produce identical (point,
+    polygon_id) hit sets."""
     global LAST_ROUTE
-    spark = points.sparkSession
-    resolutions = list(range(min_res, max_res + 1))
+    if not isinstance(polygons, DataFrame):
+        LAST_ROUTE = "broadcast"
+        return _broadcast_probe(points, polygons, lon_col, lat_col,
+                                min_res, max_res)
 
     # Materialize the polygon side ONCE. The upstream plan may be an
     # expensive Arrow parse (pages -> features); without a persist, the
-    # sizing aggregate, ring-set collect, and cover collect would each
-    # re-execute it.
-    polys_persisted = None
-    if isinstance(polygons, DataFrame):
-        polys_persisted = polygons.select("polygon_id", "ring").persist()
-        n_edges = polys_persisted.agg(
-            F.sum(F.size("ring") - 1).alias("e")).collect()[0]["e"] or 0
-        if n_edges > max_broadcast_edges:
-            LAST_ROUTE = "shuffle"
-            cells = polygon_cells_at_res(polys_persisted, res=7)
-            # polygon_cells feeds two actions (auto_salt + the join);
-            # GC-scoped materialization, then release the input persist
-            cells = cells.localCheckpoint(eager=True)
-            polys_persisted.unpersist()
-            hits = pip_join_shuffle(points, cells, lat_col=lat_col,
-                                    lon_col=lon_col, res=7)
-            return hits.drop("cell")
-        # one combined scan yields the ring edges AND the cover index
-        ring_set, index_pdf = _split_setup(
-            _polygon_setup(polys_persisted, min_res, max_res).toPandas())
+    # sizing aggregate and the set-up pass would each re-execute it.
+    polys_persisted = polygons.select("polygon_id", "ring").persist()
+    n_edges = polys_persisted.agg(
+        F.sum(F.size("ring") - 1).alias("e")).collect()[0]["e"] or 0
+    if n_edges > max_broadcast_edges:
+        LAST_ROUTE = "shuffle"
+        cells = polygon_cells_at_res(polys_persisted, res=7)
+        # polygon_cells feeds two actions (auto_salt + the join);
+        # GC-scoped materialization, then release the input persist
+        cells = cells.localCheckpoint(eager=True)
         polys_persisted.unpersist()
-    else:
-        ring_set = RingSet({p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64)
-                            for p in polygons})
-        index_pdf = build_cell_index(polygons, min_res, max_res).assign(
-            polygon_idx=lambda d: d["polygon_id"].map(ring_set.idx_of).astype(
-                "int32"))
+        hits = pip_join_shuffle(points, cells, lat_col=lat_col,
+                                lon_col=lon_col, res=7)
+        return hits.drop("cell")
     LAST_ROUTE = "broadcast"
-
-    # rings travel ONCE as a broadcast variable (unpickled once per
-    # python worker, reused across tasks) — candidate rows carry only
-    # polygon_id, not the ring JSON, so the Arrow transfer stays
-    # ~constant bytes/row and tasks pay no per-task ring-parse cost
-    rings_b = spark.sparkContext.broadcast(ring_set)
-
-    # the hot path carries an int polygon_idx, never the id string:
-    # Arrow string columns dominate kernel-stage CPU (JVM serialize +
-    # python object materialization) and anti-scale under local-mode
-    # core contention; the id is restored by a broadcast dim join on
-    # the (small) hit set afterwards.
-    # The index is broadcast-scale by contract, so holding it driver-side
-    # costs no more than the broadcast build itself — and a LocalRelation
-    # never re-executes upstream and leaves nothing cached to leak.
-    dim = spark.createDataFrame(
-        [(i, pid) for i, pid in enumerate(ring_set.ids)],
-        "polygon_idx int, polygon_id string")
-    index_pdf = index_pdf[
-        ["cell", "polygon_idx", "is_full", "west", "south", "east", "north"]]
-    index_small = spark.createDataFrame(
-        index_pdf,
-        "cell long, polygon_idx int, is_full boolean, "
-        "west double, south double, east double, north double")
-
-    # probe only resolutions the cover actually uses: small polygons
-    # put every cover leaf at max_res, so blindly exploding each point
-    # to all res levels multiplies the probe row count for nothing
-    used_res = sorted(
-        int(r) for r in
-        np.unique(index_pdf["cell"].to_numpy(dtype=np.int64) >> quadkey._RES_SHIFT)
-    )
-    resolutions = used_res or resolutions
-
-    pts = points.withColumn(
-        "_cells", _point_cells_expr(lat_col, lon_col, resolutions)
-    ).withColumn("cell", F.explode("_cells")).drop("_cells")
-
-    # ONE scan: FULL-cover hits pass through the same kernel untested
-    # (no union of two branches — a union here re-executes the whole
-    # upstream parse/index/join per branch, Catalyst does not reuse the
-    # exchange across mapInPandas subplans)
-    candidates = (
-        pts.join(F.broadcast(index_small), "cell", "inner")
-        # bbox prefilter (JVM, inclusive = safe superset of the ray-cast):
-        # drops cell-sharing candidates outside the polygon's bbox before
-        # they cross into the Python kernel
-        .where((F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
-               & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north")))
-        .drop("cell", "west", "south", "east", "north")
-    )
-
-    out_fields = [n for n in candidates.schema.fieldNames() if n != "is_full"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in candidates.schema.fields if f.name in out_fields
-    )
-
-    # mapInArrow, not mapInPandas: at millions of candidate rows the
-    # pandas DataFrame materialization (index + block manager + object
-    # boxing) on both sides of the boundary was ~half the kernel-stage
-    # cost; Arrow batches expose the numeric columns as zero-copy numpy
-    # views and the survivor filter runs as one C++ compute kernel.
-    def exact_kernel(batches):
-        import pyarrow as pa
-
-        rs: RingSet = rings_b.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            keep = cols["is_full"].to_numpy(zero_copy_only=False).astype(
-                bool, copy=True)
-            part = np.flatnonzero(~keep)
-            if len(part):
-                ridx = cols["polygon_idx"].to_numpy().astype(np.int64)[part]
-                keep[part] = rs.contains(
-                    cols[lon_col].to_numpy(zero_copy_only=False)[part],
-                    cols[lat_col].to_numpy(zero_copy_only=False)[part], ridx)
-            flt = rb.filter(pa.array(keep))
-            yield pa.RecordBatch.from_arrays(
-                [flt.column(flt.schema.get_field_index(n)) for n in out_fields],
-                names=out_fields)
-
-    hits = candidates.mapInArrow(exact_kernel, schema)
-    return hits.join(F.broadcast(dim), "polygon_idx").drop("polygon_idx")
+    # the set-up pass runs eagerly, so the persist can go right after
+    hits = _broadcast_probe(points, polys_persisted, lon_col, lat_col,
+                            min_res, max_res)
+    polys_persisted.unpersist()
+    return hits
 
 
 def polygon_cells_at_res(polygons: DataFrame, res: int = 7) -> DataFrame:
@@ -349,10 +300,8 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
                      res: int = 7) -> DataFrame:
     """Shuffle-join variant for polygon sets too big to broadcast.
 
-    polygon_cells: DataFrame(cell long, polygon_id string, ring_json
-    string) plus, when produced by polygon_cells_at_res, is_full and
-    west/south/east/north — those enable the FULL-cell bypass and the
-    JVM bbox prefilter; the minimal 3-column schema still works.
+    polygon_cells: polygon_cells_at_res output (cell, polygon_id,
+    is_full, west, south, east, north, ring_json).
 
     Round-6 plan (guide §8: decide on light rows, move heavy bytes
     once). The round-5 shape attached ring_json to EVERY candidate row
@@ -380,11 +329,8 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
     """
     if salt is None:
         salt = auto_salt(polygon_cells)
-    has_full = "is_full" in polygon_cells.columns
-    has_bbox = "west" in polygon_cells.columns
-    meta_cols = ["cell", "polygon_id"] + (["is_full"] if has_full else []) \
-        + (["west", "south", "east", "north"] if has_bbox else [])
-    cells_meta = polygon_cells.select(*meta_cols)
+    cells_meta = polygon_cells.select("cell", "polygon_id", "is_full",
+                                      "west", "south", "east", "north")
     # the rings side re-reads the same input as cells_meta; rename its
     # key so the cogroup below is not an ambiguous self-join
     rings_tbl = polygon_cells.select(
@@ -398,24 +344,18 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
     )
     candidates = pts.repartition("cell", "_salt").join(
         replicated, ["cell", "_salt"], "inner"
-    ).drop("_salt")
-    if has_bbox:
-        candidates = candidates.where(
-            (F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
-            & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north"))
-        ).drop("west", "south", "east", "north")
+    ).drop("_salt").where(
+        (F.col(lon_col) >= F.col("west")) & (F.col(lon_col) <= F.col("east"))
+        & (F.col(lat_col) >= F.col("south")) & (F.col(lat_col) <= F.col("north"))
+    ).drop("west", "south", "east", "north")
 
     out_names = [n for n in candidates.schema.fieldNames() if n != "is_full"]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in candidates.schema.fields if f.name in out_names)
 
-    if has_full:
-        full_hits = candidates.where(F.col("is_full")).drop("is_full")
-        partial = candidates.where(~F.col("is_full")).drop("is_full")
-    else:
-        full_hits = None
-        partial = candidates
+    full_hits = candidates.where(F.col("is_full")).drop("is_full")
+    partial = candidates.where(~F.col("is_full")).drop("is_full")
 
     def exact_cogroup(key, cand: pd.DataFrame, ring_pdf: pd.DataFrame
                       ) -> pd.DataFrame:
@@ -432,6 +372,4 @@ def pip_join_shuffle(points: DataFrame, polygon_cells: DataFrame,
         .cogroup(rings_tbl.groupBy("_ring_pid"))
         .applyInPandas(exact_cogroup, schema)
     )
-    if full_hits is None:
-        return exact_hits
     return full_hits.select(*out_names).unionByName(exact_hits)

@@ -1,11 +1,12 @@
 """Raster-tile <-> vector-polygon assignment (north rule).
 
 A raster layer is modeled as a regular grid: tile = quadkey cell at a
-fixed resolution with a value column. Assignment joins tiles to polygons
-through the polygon cover (JVM broadcast join on cell) and resolves
-PARTIAL cells by testing the tile *center* against the ring (standard
-center-point rasterization rule — deterministic and oracle-expressible
-for rectangles).
+fixed resolution with a value column. Assignment adds each tile's
+center point and runs it through the PIP join's broadcast probe with
+the polygon cover pinned to the tile resolution: the center's cell is
+the tile itself, FULL cover cells assign directly and PARTIAL cells test
+the center against the ring (standard center-point rasterization rule —
+deterministic and oracle-expressible for rectangles).
 
 Zonal statistics then aggregate tile values per polygon (hash agg,
 partial+final handled by Spark).
@@ -13,15 +14,11 @@ partial+final handled by Spark).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..index import quadkey
-from .pip import CELL_INDEX_SCHEMA, build_cell_index
+from .pip import _broadcast_probe
 
 
 def tiles_from_points(points: DataFrame, res: int,
@@ -38,47 +35,27 @@ def tiles_from_points(points: DataFrame, res: int,
     )
 
 
+def _tile_center(tile: Column, res: int) -> tuple[Column, Column]:
+    """(lon, lat) of a res-`res` tile's center with quadkey.cell_bounds'
+    arithmetic, so the ring test sees the same doubles; null, and so no
+    polygon, for a tile at another resolution."""
+    n = float(1 << res)
+    at_res = F.shiftright(tile, quadkey._RES_SHIFT) == res
+    nx = tile.bitwiseAND(quadkey._MASK)
+    ny = F.shiftright(tile, quadkey._Y_SHIFT).bitwiseAND(quadkey._MASK)
+    lon = ((nx / n * 360.0 - 180.0) + ((nx + 1) / n * 360.0 - 180.0)) / 2.0
+    lat = ((ny / n * 180.0 - 90.0) + ((ny + 1) / n * 180.0 - 90.0)) / 2.0
+    return F.when(at_res, lon), F.when(at_res, lat)
+
+
 def assign_tiles(tiles: DataFrame, polygons: list[dict], res: int,
                  tile_col: str = "tile") -> DataFrame:
-    """tiles(tile, ...) x polygons -> (tile rows, polygon_id).
-
-    The polygon cover is built at exactly the tile resolution so the
-    join key is the tile id itself; FULL cover cells assign directly,
-    PARTIAL cells test the tile center in the Arrow kernel.
-    """
-    from ..index.pip import RingSet
-
-    spark = tiles.sparkSession
-    index_pdf = build_cell_index(polygons, min_res=res, max_res=res)
-    index_df = spark.createDataFrame(index_pdf, CELL_INDEX_SCHEMA).drop(
-        "west", "south", "east", "north")
-    rings_b = spark.sparkContext.broadcast(
-        RingSet({p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64)
-                 for p in polygons}))
-
-    cand = tiles.join(F.broadcast(index_df), tiles[tile_col] == index_df.cell, "inner").drop("cell")
-    out_fields = [f for f in cand.schema.fields if f.name != "is_full"]
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    names = [f.name for f in out_fields]
-
-    def center_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rs: RingSet = rings_b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            keep = pdf["is_full"].to_numpy(dtype=bool).copy()
-            part = np.flatnonzero(~keep)
-            if len(part):
-                cells = pdf[tile_col].to_numpy()[part]
-                west, south, east, north = quadkey.cell_bounds(cells)
-                cx = (np.asarray(west) + np.asarray(east)) / 2.0
-                cy = (np.asarray(south) + np.asarray(north)) / 2.0
-                ridx = pdf["polygon_id"].iloc[part].map(rs.idx_of).to_numpy(dtype=np.int64)
-                keep[part] = rs.contains(cx, cy, ridx)
-            yield pdf.loc[keep, names]
-
-    return cand.mapInPandas(center_kernel, schema)
+    """tiles(tile, ...) x polygons -> (tile rows, polygon_id): every
+    (tile, polygon) pair whose tile center lies in the polygon."""
+    lon, lat = _tile_center(F.col(tile_col), res)
+    centers = tiles.withColumn("_tile_lon", lon).withColumn("_tile_lat", lat)
+    return _broadcast_probe(centers, polygons, "_tile_lon", "_tile_lat",
+                            res, res).drop("_tile_lon", "_tile_lat")
 
 
 def zonal_stats(assigned: DataFrame, value_col: str = "tile_value") -> DataFrame:

@@ -3,8 +3,8 @@
 
 from __future__ import annotations
 
-import json
 import os
+from decimal import Decimal
 
 import numpy as np
 import pytest
@@ -14,7 +14,7 @@ from openair_spark.index import quadkey
 from openair_spark.index.pip import points_in_ring
 from openair_spark.ops.checkpoint import run_partitioned, read_manifest
 from openair_spark.ops.knn import knn_bruteforce, knn_join
-from openair_spark.ops.pip import build_cell_index, pip_join, pip_join_shuffle
+from openair_spark.ops.pip import pip_join, pip_join_shuffle, polygon_cells_at_res
 from openair_spark.ops.raster import assign_tiles, tiles_from_points, zonal_stats
 
 
@@ -55,24 +55,54 @@ def _expected_pairs(points_rows):
 def test_pip_join_broadcast_exact(points, spark):
     rows = points.collect()
     expected = _expected_pairs(rows)
+    # a null-coordinate point gets no hit and raises nothing
+    with_null = points.unionByName(
+        spark.createDataFrame([("p-null", None, 10.0)], points.schema))
     got = {
         (r["point_id"], r["polygon_id"])
-        for r in pip_join(points, POLYGONS).select("point_id", "polygon_id").collect()
+        for r in pip_join(with_null, POLYGONS).select("point_id", "polygon_id").collect()
     }
     assert got == expected
     assert len(got) > 0
+
+    # no polygons: zero rows, same output columns
+    empty = pip_join(points, [])
+    assert empty.columns == points.columns + ["polygon_id"]
+    assert empty.count() == 0
+    # batches whose points hit no cover cell
+    far = spark.createDataFrame([(f"far{i}", -40.0 - i, -60.0 + i) for i in range(8)],
+                                points.schema)
+    assert pip_join(far, POLYGONS).count() == 0
+
+    # hits equal the ray cast of the points' doubles for a grid-aligned
+    # ring with points on its edges, corners and cell boundaries (lat/lon
+    # multiples of 180/2^9), and for decimal coordinates on a kite's edges
+    step = 180.0 / 2 ** 9
+    grid = ([(f"g{i}_{j}", (144 + j) * step, (30 + i) * step)
+             for i in range(-6, 7) for j in range(-6, 7)],
+            points.schema, _ring(30 * step, 144 * step, 4 * step))
+    kite = ([(f"k{i}_{j}", Decimal(i) / 50, Decimal(j) / 20)
+             for i in range(51) for j in range(21)],
+            "point_id string, lat decimal(20,6), lon decimal(20,6)",
+            [[0.0, 0.0], [0.5, 0.0], [0.5, 0.3], [0.0, 0.7], [0.0, 0.0]])
+    for case_rows, schema, ring in (grid, kite):
+        inside = points_in_ring(np.array([float(r[2]) for r in case_rows]),
+                                np.array([float(r[1]) for r in case_rows]),
+                                np.asarray(ring))
+        got = {r["point_id"] for r in pip_join(
+            spark.createDataFrame(case_rows, schema),
+            [{"polygon_id": "case", "ring": ring}]).collect()}
+        assert got == {r[0] for r, ok in zip(case_rows, inside) if ok}
+        assert 0 < len(got) < len(case_rows)
 
 
 def test_pip_join_shuffle_matches_broadcast(points, spark):
     rows = points.collect()
     expected = _expected_pairs(rows)
-    # flat res-7 cover for the shuffle variant
-    cells = []
-    for poly in POLYGONS:
-        pdf = build_cell_index([poly], min_res=7, max_res=7)
-        for _, row in pdf.iterrows():
-            cells.append((int(row["cell"]), poly["polygon_id"], json.dumps(poly["ring"])))
-    cells_df = spark.createDataFrame(cells, "cell long, polygon_id string, ring_json string")
+    polys_df = spark.createDataFrame(
+        [(p["polygon_id"], p["ring"]) for p in POLYGONS],
+        "polygon_id string, ring array<array<double>>")
+    cells_df = polygon_cells_at_res(polys_df, res=7)
     got = {
         (r["point_id"], r["polygon_id"])
         for r in pip_join_shuffle(points, cells_df, salt=4, res=7)
@@ -108,6 +138,23 @@ def test_pip_join_auto_routes_to_shuffle(points, spark):
     assert shuffle_hits == broadcast_hits and len(shuffle_hits) > 0
     # unified output columns regardless of route
     assert set(routed.columns) == {"point_id", "lat", "lon", "polygon_id"}
+
+
+def test_broadcast_probe_plan_shape(points, spark):
+    """The broadcast PIP route (list and DataFrame polygons) and
+    assign_tiles each run as one MapInArrow over their input: no
+    explode, no join operator."""
+    polys_df = spark.createDataFrame(
+        [(p["polygon_id"], p["ring"]) for p in POLYGONS],
+        "polygon_id string, ring array<array<double>>")
+    tiles = tiles_from_points(points.withColumn("value", F.lit(1.0)), res=8)
+    for df in (pip_join(points, POLYGONS), pip_join(points, polys_df),
+               assign_tiles(tiles, POLYGONS, res=8)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        for op in ("Generate", "BroadcastHashJoin", "SortMergeJoin",
+                   "ShuffledHashJoin", "NestedLoopJoin"):
+            assert op not in plan, plan
 
 
 def test_knn_cell_local_matches_bruteforce(points, spark):
@@ -161,14 +208,23 @@ def test_knn_rings2_high_latitude_exact(spark):
 def test_raster_assignment_and_zonal(points, spark):
     pts = points.withColumn("value", F.col("lat") + F.col("lon"))
     tiles = tiles_from_points(pts, res=8, value_col="value").cache()
-    assigned = assign_tiles(tiles, POLYGONS, res=8)
-    got = assigned.select("tile", "polygon_id").collect()
-    # verify against center-point rule
-    for r in got:
-        west, south, east, north = quadkey.cell_bounds(int(r["tile"]))
-        cx, cy = (west + east) / 2, (south + north) / 2
-        poly = next(p for p in POLYGONS if p["polygon_id"] == r["polygon_id"])
-        assert points_in_ring(np.array([cx]), np.array([cy]), np.asarray(poly["ring"]))[0]
+    # a tile whose resolution bits say 9 gets no polygon, though its
+    # (nx, ny) would be a res-8 tile inside box-a
+    other_res = spark.createDataFrame(
+        [(int(quadkey.cell_id(50.0, 10.0, 8)) + (1 << 54), 1.0, 1.0, 1)], tiles.schema)
+    assigned = assign_tiles(tiles.unionByName(other_res), POLYGONS, res=8)
+    got = {(r["tile"], r["polygon_id"])
+           for r in assigned.select("tile", "polygon_id").collect()}
+    # exactly the center-point rule
+    tile_ids = np.array([r["tile"] for r in tiles.select("tile").collect()])
+    west, south, east, north = quadkey.cell_bounds(tile_ids)
+    cx, cy = (west + east) / 2, (south + north) / 2
+    expected = {(int(t), p["polygon_id"]) for p in POLYGONS
+                for t in tile_ids[points_in_ring(cx, cy, np.asarray(p["ring"]))]}
+    assert got == expected and len(got) > 0
+    assert assigned.columns == tiles.columns + ["polygon_id"]
+    empty = assign_tiles(tiles, [], res=8)
+    assert empty.columns == assigned.columns and empty.count() == 0
     stats = zonal_stats(assigned).collect()
     assert {r["polygon_id"] for r in stats} <= {p["polygon_id"] for p in POLYGONS}
     assert all(r["n_tiles"] > 0 for r in stats)
